@@ -362,3 +362,35 @@ def test_robust_baseline_refuses_rising_floors(tmp_path):
     r = subprocess.run(cmd + ["--allow-rising-floors"], capture_output=True, text=True)
     assert r.returncode == 0, r.stdout + r.stderr
     assert json.loads(out.read_text())["queries"]["q1"] == 3.0
+
+
+def test_gate_retry_rebuilds_a_memo_the_timed_run_built(spark):
+    """A candidate whose timed run built a session memo must retry from
+    cleared memos — a retry served by a memo hit would clear a real
+    regression in the kernel build. Candidates that built nothing keep
+    the memos warm."""
+    from bench import _retry_candidates
+    from wikistream_event_data_pipeline_aws_spark.operators import memo
+
+    builds = []
+    cache: dict = {}
+
+    def query(spark, sf_dir):
+        def build():
+            builds.append(1)
+            return spark.range(3)
+
+        return memo.session_memo(cache, spark, ("gate-retry-test",), build, label="k")
+
+    qs = {"memoized": query, "plain": lambda spark, sf_dir: spark.range(1)}
+    query(spark, None).count()  # the timed run: one build
+    prev_q = {"memoized": 0.01, "plain": 0.01}
+
+    timings = {"plain": 50.0}
+    _retry_candidates(spark, None, qs, timings, prev_q, 1.0, {})
+    assert timings["plain"] < 50.0 and cache, "a memo-free retry keeps memos"
+
+    timings = {"memoized": 50.0}
+    _retry_candidates(spark, None, qs, timings, prev_q, 1.0, {"memoized": ["k"]})
+    assert len(builds) == 2, "the retry must rebuild the kernel, not hit it"
+    assert timings["memoized"] < 50.0

@@ -958,3 +958,23 @@ def test_det_ln_ratio_cross_engine_bit_identity(spark):
         true = math.log(k[0] / k[1])
         assert abs(v - true) <= 1e-10 * max(abs(true), 1e-9), (k, v, true)
     assert got[(1, 1)] == 0.0
+
+
+def test_jaccard_pairs_shingles_is_duplicate_insensitive(spark):
+    """``jaccard_pairs(shingles=...)`` scores a SET of (id, shingle)
+    rows: a repeated row must not inflate n_shared / n_shingles."""
+    from wikistream_event_data_pipeline_aws_spark.operators.textops import (
+        exploded_shingles,
+        jaccard_pairs,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f"), (3, "b c d e f")], "doc_id int, text string"
+    )
+    want = sorted(jaccard_pairs(docs, "doc_id", "text", k=3).collect())
+    assert want, "the fixture must produce co-shingled pairs"
+    sh = exploded_shingles(docs, "doc_id", "text", k=3).distinct()
+    dup = sh.unionByName(sh.filter(F.col("doc_id") == 1))
+    for shingles in (sh, dup):
+        got = jaccard_pairs(docs, "doc_id", "text", k=3, shingles=shingles).collect()
+        assert sorted(got) == want

@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import read_parquet
 from .checks import DQGateResult, results_df
 
 
@@ -39,7 +40,7 @@ class AuditWriter:
         )
 
     def read_results(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._path("quality_results"))
+        return read_parquet(spark, self._path("quality_results"))
 
     def latest_gate_blocked(self, spark: SparkSession, layer: str) -> bool | None:
         """Q12/A8: does the most recent run for ``layer`` contain a
@@ -53,7 +54,7 @@ class AuditWriter:
 
         if not path_exists(spark, path):
             return None
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         rolled = (
             df.filter(F.col("layer") == layer)
             .groupBy("run_id")

@@ -41,6 +41,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from ..catalog import read_parquet
+
 
 @dataclass(frozen=True)
 class PartitionInventory:
@@ -134,7 +136,7 @@ def execute_compaction(
 
     def _rewrite(partition: str, n_bins: int) -> None:
         part_path = f"{path}/{partition}" if partition else path
-        df = spark.read.parquet(part_path)
+        df = read_parquet(spark, part_path)
         # pin rows before overwriting the files they came from
         pinned = df.localCheckpoint(eager=True)
         pinned.repartition(n_bins).write.mode("overwrite").parquet(part_path)
@@ -180,12 +182,12 @@ def migrate_partition_layout(
     rows_written) — equal by construction, re-verified from the
     destination files because a migration's row-preservation claim must
     come from what actually landed on disk."""
-    src = spark.read.option("basePath", src_path).parquet(src_path)
+    src = read_parquet(spark, src_path)
     n_src = src.count()
     (
         src.write.mode("overwrite")
         .partitionBy(*partition_by)
         .parquet(dst_path)
     )
-    n_dst = spark.read.option("basePath", dst_path).parquet(dst_path).count()
+    n_dst = read_parquet(spark, dst_path).count()
     return n_src, n_dst

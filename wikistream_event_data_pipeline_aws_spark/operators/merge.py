@@ -40,6 +40,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..catalog import read_parquet
+
 
 def path_exists(spark: SparkSession, path: str) -> bool:
     """True if *path* exists, via the Hadoop FS API — the explicit
@@ -198,7 +200,7 @@ def repair_dedup(
     duplicate sharing another key's timestamp survives or deletes
     wrongly (SURVEY §7.3 hard part 5). This implementation is the
     row_number form of W2, which is per-key by construction."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     before = df.count()
     kept = dedup_keep_one(df, keys, order_by, keep="first").localCheckpoint(eager=True)
     after = kept.count()
@@ -233,12 +235,12 @@ def upsert_parquet(
             dedup_keep_one(source, keys, order_by, keep="last") if order_by else source
         )
     elif partition_by:
-        target = spark.read.parquet(path).filter(
+        target = read_parquet(spark, path).filter(
             source_partition_filter(source, partition_by)
         )
         merged = merge_upsert(target, source, keys, order_by)
     else:
-        merged = merge_upsert(spark.read.parquet(path), source, keys, order_by)
+        merged = merge_upsert(read_parquet(spark, path), source, keys, order_by)
     # break lineage before overwriting the path we read from (cache alone
     # can be evicted and recompute against the clobbered files)
     merged_rows = merged.localCheckpoint(eager=True)
@@ -281,7 +283,7 @@ def insert_only_parquet(
         n = new_rows.count()
         writer = new_rows.write.mode("overwrite")
     else:
-        target = spark.read.parquet(path)
+        target = read_parquet(spark, path)
         if partition_by:
             target = target.filter(source_partition_filter(source, partition_by))
         # NULL-SAFE anti-join: a plain key equi-join never matches

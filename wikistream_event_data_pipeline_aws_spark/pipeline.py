@@ -33,7 +33,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import DEFAULT_SF_DIR, load_table
+from .catalog import DEFAULT_SF_DIR, load_table, read_parquet
 from .dq.audit import AuditWriter
 from .dq.checks import (
     WARNING,
@@ -201,7 +201,7 @@ class Pipeline:
         return os.path.join(self.warehouse, layer, name)
 
     def read_table(self, layer: str, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.table_path(layer, name))
+        return read_parquet(self.spark, self.table_path(layer, name))
 
     # each step returns a StepReport; a gate BLOCKS by returning status
     # "BLOCKED", which run() turns into skipping the remaining steps
@@ -344,7 +344,7 @@ class Pipeline:
         ).repartition(1).write.mode("append").parquet(prof_path)
         drift_notes = []
         baseline = (
-            self.spark.read.parquet(prof_path)
+            read_parquet(self.spark, prof_path)
             .filter(F.col("run_id") != run_id)
             .groupBy("column")
             .agg(F.avg("null_rate").alias("base_null_rate"))

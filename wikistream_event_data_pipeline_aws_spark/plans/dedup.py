@@ -1160,8 +1160,10 @@ def _seed_simhash_caches_fused(spark: SparkSession, sf_dir: str) -> None:
     (``operators/textops.simhash_fused`` — pinned bit-for-bit identical
     to the single-width builds by the invariants suite) and seed both
     caches in the exact format their owners store. No-op whenever
-    either cache is already warm (the bench battery's case, where the
-    owner queries run first), so in-battery behavior is unchanged; the
+    either cache is already warm. In the bench battery that is the s60
+    cache: ``dedup_method_agreement`` sorts before
+    ``dedup_sim16_agreement`` and warms it (the s16 and s60 owner
+    queries sort after), so in-battery behavior is unchanged; the
     s16 fail-fast envelope still runs per call in
     ``_simhash16_pairs_shared`` against the seeded signature count."""
     from ..operators.memo import file_fingerprint, log_memo_event, register_cache

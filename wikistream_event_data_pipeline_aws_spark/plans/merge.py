@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..operators.merge import merge_insert_only, merge_upsert, scd2_apply
 
 _T_END = "1998-01-01 00:00:00"
@@ -286,24 +286,23 @@ def seed_scd2_dim(spark: SparkSession, sf_dir: str, dim_path: str) -> None:
     dim0.write.mode("overwrite").parquet(dim_path)
 
 
-# sf_dir -> (fixture base dir, cdc schema); see scd2_stream_replay
-_SCD2_FIXTURE_CACHE: dict[str, tuple] = {}
+# sf_dir -> fixture base dir; see scd2_stream_replay
+_SCD2_FIXTURE_CACHE: dict[str, str] = {}
 
 
-def _scd2_fixtures(spark: SparkSession, sf_dir: str) -> tuple:
-    """(fixture base dir, cdc schema), built once per (session, sf_dir)
-    — deterministic functions of the customer table (bench.warmup
-    pre-builds them with the other setup artifacts)."""
+def _scd2_fixtures(spark: SparkSession, sf_dir: str) -> str:
+    """Fixture base dir (``cdc/`` and ``dim/``), built once per (session,
+    sf_dir) — deterministic functions of the customer table
+    (bench.warmup pre-builds them with the other setup artifacts)."""
     import tempfile
 
-    cached = _SCD2_FIXTURE_CACHE.get(sf_dir)
-    if cached is None:
+    base = _SCD2_FIXTURE_CACHE.get(sf_dir)
+    if base is None:
         base = tempfile.mkdtemp(prefix="scd2_fixture_")
         write_cdc_fixture(spark, sf_dir, f"{base}/cdc")
         seed_scd2_dim(spark, sf_dir, f"{base}/dim")
-        cached = (base, spark.read.parquet(f"{base}/cdc").schema)
-        _SCD2_FIXTURE_CACHE[sf_dir] = cached
-    return cached
+        _SCD2_FIXTURE_CACHE[sf_dir] = base
+    return base
 
 
 def scd2_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -331,13 +330,15 @@ def scd2_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The CDC side is read-only and shared; the dimension is MUTATED by
     # the sink's merges, so each invocation gets a fresh file-copy of
     # the pristine seed (a few ms of cp vs a Spark write job).
-    base, schema = _scd2_fixtures(spark, sf_dir)
+    base = _scd2_fixtures(spark, sf_dir)
     cdc_dir = f"{base}/cdc"
     tmp = tempfile.mkdtemp(prefix="scd2_stream_")
     dim_path = f"{tmp}/dim"
     ckpt = f"{tmp}/ckpt"
     shutil.copytree(f"{base}/dim", dim_path)
-    stream = file_stream(spark, cdc_dir, schema, max_files_per_trigger=1)
+    stream = file_stream(
+        spark, cdc_dir, read_parquet(spark, cdc_dir).schema, max_files_per_trigger=1
+    )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -358,7 +359,7 @@ def scd2_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from functools import reduce
 
-    hist = spark.read.parquet(dim_path)
+    hist = read_parquet(spark, dim_path)
     parts = []
     for asof in _CDC_ASOF:
         snap = hist.filter(

@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 
 TARGET_DATES = ("2024-01-05", "2024-01-17")
 
@@ -59,7 +59,7 @@ def partitioned_scan_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6: date-window rollup over the partitioned table; the predicate
     prunes to the two matching date directories before any IO."""
     path = write_partitioned_events(spark, sf_dir)
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return (
         back.filter(F.col("event_date").isin(*TARGET_DATES))
         .groupBy("event_date", "event_type")
@@ -267,7 +267,7 @@ def _bucketed_table(spark: SparkSession, sf_dir: str, src: str, key: str) -> str
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         # CLUSTERED BY requires an explicit column list; derive it from
         # the existing files' footer schema
-        schema = spark.read.parquet(path).schema
+        schema = read_parquet(spark, path).schema
         cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
         spark.sql(
             f"""CREATE TABLE {name} ({cols}) USING PARQUET
@@ -384,7 +384,7 @@ def partition_evolution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     old_path, new_path = write_evolution_tables(spark, sf_dir)
 
     def hashed(path: str, side: str) -> DataFrame:
-        df = spark.read.option("basePath", path).parquet(path)
+        df = read_parquet(spark, path)
         non_key = ["event_date", "event_type", "user_id", "value"]
         return df.select(
             "event_id",

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..operators.detmath import (
     LN2,
     det_ln_ratio,
@@ -1124,8 +1124,9 @@ def streaming_ann_index_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _ann_sig_stream_src(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="annsig_stream_")
     sig_path, ckpt = f"{tmp}/sigs", f"{tmp}/ckpt"
-    schema = spark.read.parquet(src).schema
-    stream = file_stream(spark, src, schema, max_files_per_trigger=1)
+    stream = file_stream(
+        spark, src, read_parquet(spark, src).schema, max_files_per_trigger=1
+    )
     q = start_ann_signature_sink(
         stream,
         sig_path,
@@ -1139,7 +1140,7 @@ def streaming_ann_index_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     if q.isActive:
         q.stop()
         raise TimeoutError("ann signature stream did not finish in 300s")
-    sigs = spark.read.parquet(sig_path)
+    sigs = read_parquet(spark, sig_path)
     qs = sigs.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "table", "bucket"
     )

@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..operators.textops import hex_hash
 
 HLL_M = 1024  # registers (p=10)
@@ -798,7 +798,7 @@ def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
         raise TimeoutError("hll stream did not finish in 300s")
 
-    regs = spark.read.parquet(regs_path)
+    regs = read_parquet(spark, regs_path)
     a = regs.agg(
         F.count(F.lit(1)).alias("n_obs"),
         F.sum(F.expr("CAST(shiftleft(1L, 62 - M) AS DECIMAL(38,0))")).alias("s_obs"),
@@ -902,7 +902,7 @@ def streaming_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
         raise TimeoutError("histogram stream did not finish in 300s")
 
     hist = (
-        spark.read.parquet(bins_path)
+        read_parquet(spark, bins_path)
         .groupBy("bin")
         .agg(F.sum("cnt").alias("cnt"))
     )

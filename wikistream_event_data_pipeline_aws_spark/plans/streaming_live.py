@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..session import ensure_session_confs
 from ..streaming.ingest import stateful_user_counts, watermark_dedup
 
@@ -40,20 +40,12 @@ _AWAIT_S = 300
 _HARNESS_SHUFFLE_PARTITIONS = "8"
 
 
-_EVENTS_SCHEMA_CACHE: dict[str, object] = {}
-
-
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events table with the same epoch-nanos
     -> microsecond-timestamp normalization as catalog.load_table."""
     ensure_session_confs(spark)
-    path = f"{sf_dir}/events.parquet"
-    # the footer-read driver job costs ~0.1s and several queries build
-    # this stream twice (both interval-join sides) — cache per sf_dir
-    schema = _EVENTS_SCHEMA_CACHE.get(path)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _EVENTS_SCHEMA_CACHE[path] = schema
+    # the declared schema comes from a driver-side footer read (no job)
+    schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     # FileStreamSource requires a directory basePath; glob-filter the
     # events file out of the sf_dir
     raw = (

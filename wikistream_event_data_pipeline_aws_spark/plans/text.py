@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..operators.detmath import det_ln_ratio
 from ..operators.textops import STOPWORDS, bpe_piece_count, fingerprint, tokenize
 
@@ -463,7 +463,7 @@ def streaming_postings_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     if q.isActive:
         q.stop()
         raise TimeoutError("postings stream did not finish in 300s")
-    postings = spark.read.parquet(postings_path).select("doc_id", "token")
+    postings = read_parquet(spark, postings_path).select("doc_id", "token")
     return _index_topk_from_postings(postings)
 
 
@@ -1447,7 +1447,7 @@ def streaming_entropy_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     if q.isActive:
         q.stop()
         raise TimeoutError("entropy stream did not finish in 300s")
-    state = spark.read.parquet(state_path)
+    state = read_parquet(spark, state_path)
     cell = state.groupBy("source", "token").agg(F.sum("cnt").alias("c"))
     return _entropy_kl_from_cells(cell)
 

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from ..catalog import read_parquet
 from ..operators.merge import insert_only_parquet, path_exists, scd2_apply
 
 
@@ -453,7 +454,7 @@ def start_scd2_sink(
             r[0]
             for r in batch_df.select(eff_date_col).distinct().orderBy(eff_date_col).collect()
         ]
-        dim = spark.read.parquet(dim_path)
+        dim = read_parquet(spark, dim_path)
         for eff in effs:
             updates = batch_df.filter(F.col(eff_date_col) == eff).select(*keys, *attrs)
             # late-update guard: drop updates not strictly newer than the
@@ -658,7 +659,7 @@ def mergeable_commit(
         if max_col is None:
             raise ValueError("register-max needs max_col")
         if path_exists(spark, path):
-            delta = delta.unionByName(spark.read.parquet(path))
+            delta = delta.unionByName(read_parquet(spark, path))
         merged = delta.groupBy(*keys).agg(F.max(max_col).alias(max_col))
         rows = merged.collect()  # bounded by construction (register state)
         if not rows:
